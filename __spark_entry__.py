@@ -1074,14 +1074,13 @@ def emb_near_dup_fractional(spark: SparkSession, sf_dir: str) -> SparkDF:
 
 def emb_near_dup_arrow(spark: SparkSession, sf_dir: str) -> SparkDF:
     """The PRODUCTION near-dup configuration end to end: sized_lsh
-    occupancy-stable cells from one corpus count, multiprobe=2, and the
-    round-10 BLAS-batch Arrow scoring tier (score_arrow=True — the
-    interpreted cosine fold measured ~85% of multiprobe wall on the
-    board). Same planted-exact-copy fixture as emb_near_dup_fractional:
-    identical vectors collide at every sizing, their cosine is ~1.0 in
-    any summation order, and the fixture's max non-identical cosine is
-    ~0.6 — so the round-6 values cannot sit near an ulp edge and the
-    brute-force oracle is exact despite the tier's BLAS summation."""
+    occupancy-stable cells from one corpus count and multiprobe=2,
+    scored in the meeting join like every near-dup path. Same
+    planted-exact-copy fixture as emb_near_dup_fractional: identical
+    vectors collide at every sizing and the fixture's max non-identical
+    cosine is ~0.6, so the true pair set at threshold 0.95 is exactly
+    the planted pairs and the brute-force oracle replays the same
+    cosine bits."""
     from colnade_spark.operators.similarity import sized_lsh
 
     e = _embs(spark, sf_dir).select("vec_id", "embedding")
@@ -1092,23 +1091,17 @@ def emb_near_dup_arrow(spark: SparkSession, sf_dir: str) -> SparkDF:
     bits, frac = sized_lsh(allv.count(), target_occupancy=8.0)
     return similarity.embedding_near_dups(
         allv, dim=64, threshold=0.95, bits=bits, refine_frac=frac,
-        tables=4, multiprobe=2, score_arrow=True,
+        tables=4, multiprobe=2,
     ).select("id_a", "id_b", F.round(F.col("cos_sim"), 6).alias("cos_sim"))
 
 
 def emb_near_dup_injoin(spark: SparkSession, sf_dir: str) -> SparkDF:
-    """The round-10 IN-JOIN scoring tier end to end (score_in_join=True
-    — vectors ride the bucket rows, every meeting is scored by the
-    BLAS-batch UDF inside the join, and only threshold survivors reach
-    the distinct): same sized cells + multiprobe=2 production config as
-    emb_near_dup_arrow, minus the operator's dominant shuffle term (the
-    per-pair vector attach AFTER the distinct — ~11 of 16.7 GB/rep at
-    the 2M-vector board tier). Same planted-exact-copy fixture and the
-    same brute-force oracle: identical vectors collide at every sizing,
-    their cosine is ~1.0 in any summation order, and the fixture's max
-    non-identical cosine is ~0.6 — duplicate meetings collapse in the
-    distinct because the per-row einsum is bit-symmetric and
-    batch-independent."""
+    """The same query as emb_near_dup_arrow: sized cells, multiprobe=2,
+    every bucket meeting scored inside the join and only threshold
+    survivors reaching the distinct, where duplicate meetings collapse
+    because the kernel is bit-symmetric and batch-independent. Both
+    names stay because the bench board and its goldens list them. Same
+    planted-exact-copy fixture and the same brute-force oracle."""
     from colnade_spark.operators.similarity import sized_lsh
 
     e = _embs(spark, sf_dir).select("vec_id", "embedding")
@@ -1119,7 +1112,7 @@ def emb_near_dup_injoin(spark: SparkSession, sf_dir: str) -> SparkDF:
     bits, frac = sized_lsh(allv.count(), target_occupancy=8.0)
     return similarity.embedding_near_dups(
         allv, dim=64, threshold=0.95, bits=bits, refine_frac=frac,
-        tables=4, multiprobe=2, score_in_join=True,
+        tables=4, multiprobe=2,
     ).select("id_a", "id_b", F.round(F.col("cos_sim"), 6).alias("cos_sim"))
 
 

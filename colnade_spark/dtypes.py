@@ -251,10 +251,6 @@ def is_numeric(dt: type[DType]) -> bool:
     return isinstance(dt, type) and issubclass(dt, NumericType)
 
 
-def is_integer(dt: type[DType]) -> bool:
-    return isinstance(dt, type) and issubclass(dt, IntegerType)
-
-
 def is_float(dt: type[DType]) -> bool:
     return isinstance(dt, type) and issubclass(dt, FloatType)
 

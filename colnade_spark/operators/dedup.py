@@ -112,45 +112,6 @@ def _minhash_full_udf(num_hashes: int, shingle_k: int, seed: int):
     return pandas_udf(f, "array<long>")
 
 
-def _minhash_rehash_udf(num_hashes: int, seed: int):
-    """Vectorized (num_hashes × shingles) rehash + column-min per row.
-
-    The shingle hashing stays JVM-side (xxhash64 at the scan); this UDF only
-    sees the per-doc array<long> of shingle hashes and applies ``num_hashes``
-    murmur-finalized affine hashes in one numpy broadcast — measured ~10×
-    over the interpreted higher-order-function fold at 64 hashes.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    rng = random.Random(seed)
-    A = np.array(
-        [rng.randrange(1, 1 << 62) | 1 for _ in range(num_hashes)], dtype=np.uint64
-    ).reshape(-1, 1)
-    B = np.array(
-        [rng.randrange(1 << 62) for _ in range(num_hashes)], dtype=np.uint64
-    ).reshape(-1, 1)
-    C = np.uint64(0xFF51AFD7ED558CCD)
-
-    def f(s):
-        out = []
-        with np.errstate(over="ignore"):
-            for arr in s:
-                h = np.asarray(arr, dtype=np.int64).view(np.uint64)
-                if h.size == 0:
-                    h = np.zeros(1, dtype=np.uint64)
-                y = A * h[None, :] + B  # wraps mod 2^64
-                y ^= y >> np.uint64(33)
-                y *= C
-                y ^= y >> np.uint64(29)
-                out.append(y.min(axis=1).view(np.int64))
-        return pd.Series(out)
-
-    f.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    return pandas_udf(f, "array<long>")
-
-
 def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -10,8 +10,10 @@ Two paths, as a real 100 TB pipeline needs both:
   independent tables. Turns the cross product into equi-joins on bucket keys
   — the scale path (recall < 1, tunable via bits/tables).
 
-Dot products use ``F.zip_with`` + ``F.aggregate`` in DOUBLE — JVM built-ins,
-no Python in the hot path.
+Dot products use ``F.zip_with`` + ``F.aggregate`` in DOUBLE — JVM
+built-ins. ``embedding_near_dups`` scores its candidates with
+``_cosine_udf`` instead, an Arrow-batched numpy kernel that replays the
+same fold order and so returns the same bits as ``cosine``.
 """
 
 from __future__ import annotations
@@ -20,8 +22,6 @@ import random
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from colnade_spark.operators.skew import full_shuffle_width
 from pyspark.sql.window import Window
 
 
@@ -38,7 +38,9 @@ def norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+    """Cosine similarity; NULL when either vector has zero norm (DuckDB's
+    ``x / 0.0``), where a plain divide raises under ANSI mode."""
+    return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
 def brute_force_topk(
@@ -160,6 +162,27 @@ def sized_lsh(
     return lo, cells / (1 << lo) - 1.0
 
 
+def _stack_vectors(s, dim: int):
+    """The non-NULL vectors of a pandas UDF batch as a float64
+    (rows, dim) matrix, plus their positions in the batch."""
+    import numpy as np
+
+    at = np.flatnonzero(s.notna().to_numpy())
+    if not len(at):
+        return np.empty((0, dim)), at
+    return np.vstack(s.to_numpy()[at]).astype(np.float64), at
+
+
+def _scatter(rows, at, n: int):
+    """Per-row results back at their batch positions; NULL elsewhere."""
+    import pandas as pd
+
+    out = [None] * n
+    for i, row in zip(at, rows):
+        out[i] = row
+    return pd.Series(out, dtype=object)
+
+
 def rp_buckets_udf(plane_sets: list[list[list[float]]], refine_frac: float = 0.0):
     """Vectorized multi-table sketching: one Arrow-batched pandas UDF
     computing ALL tables' bucket ids per vector via a single numpy matmul.
@@ -167,7 +190,8 @@ def rp_buckets_udf(plane_sets: list[list[list[float]]], refine_frac: float = 0.0
     Dense linear algebra is the sanctioned Pandas-UDF case: the interpreted
     higher-order-function fold costs ~60 array traversals per row, while
     (batch × dim) @ (dim × total_bits) is one BLAS call per Arrow batch.
-    Returns array<long>, one bucket id per table.
+    Returns array<long>, one bucket id per table; NULL for a NULL
+    vector, which therefore lands in no bucket.
 
     With ``refine_frac > 0`` each table's LAST plane is the fractional
     refinement plane (see ``refine_key``): the packed sketch over all
@@ -190,35 +214,19 @@ def rp_buckets_udf(plane_sets: list[list[list[float]]], refine_frac: float = 0.0
     to_keys = _refine_keys_np(bits - 1, refine_frac) if refine_frac else None
 
     def f(s):
-        mat = np.vstack(s.to_numpy())  # (batch, dim)
-        signs = (mat.astype(np.float64) @ stacked) >= 0  # (batch, tables*bits)
+        mat, at = _stack_vectors(s, len(stacked))  # (rows, dim)
+        signs = (mat @ stacked) >= 0  # (rows, tables*bits)
         per_table = signs.reshape(len(mat), tables, bits)
-        buckets = (per_table * weights).sum(axis=2)  # (batch, tables)
+        buckets = (per_table * weights).sum(axis=2)  # (rows, tables)
         if to_keys is not None:
             buckets = to_keys(buckets)
-        return pd.Series(list(buckets))
+        return _scatter(list(buckets), at, len(s))
 
     # real class annotations: the module-wide `from __future__ import
     # annotations` would stringify inline hints, which pandas_udf can't
     # resolve at decoration time
     f.__annotations__ = {"s": pd.Series, "return": pd.Series}
     return pandas_udf(f, "array<long>")
-
-
-def rp_sketch(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane sign sketch packed into a long (≤ 63 planes)."""
-    from colnade_spark.operators.litutil import lit_double_array
-
-    out = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        # one parsed SQL literal per plane, not bits·dim py4j lit()
-        # round-trips per plan build — see litutil
-        plane = lit_double_array(p)
-        bit = F.when(dot(vec, plane) >= 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-            F.lit(0).cast("long")
-        )
-        out = out.bitwiseOR(bit)
-    return out
 
 
 def lsh_topk(
@@ -455,36 +463,21 @@ def embedding_near_dups(
     max_bucket: int | None = None,
     multiprobe: int = 0,
     refine_frac: float = 0.0,
-    score_arrow: bool = False,
-    score_in_join: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine ≥
     threshold), candidates via the same multi-table RP-LSH bucketing.
 
-    ``score_arrow=True`` scores candidates with the BLAS-batch cosine
-    UDF instead of the interpreted HOF fold — the production tier
-    (candidate scoring dominates the wall once cells are sized; the
-    round-10 board measured the fold at ~85% of multiprobe wall). Pair
-    SETS are identical unless a pair sits within ~1 ulp of the
-    threshold; cos_sim may differ from the fold in the last ulp, which
-    is why the bit-exact oracle twins keep the default fold.
-
-    ``score_in_join=True`` moves the scoring INTO the bucket meeting
-    join: vectors ride the bucket rows, every meeting is scored by the
-    BLAS-batch UDF on the join output, and only the pairs at or above
-    the threshold reach the ``distinct``. The default path shuffles the
-    full candidate-pair set twice more to attach vectors AFTER the
-    distinct — and the second attach drags a ~dim·4-byte vector per
-    PAIR through an id-keyed exchange, the dominant shuffle term of the
-    whole operator once cells are sized (round-10 board, 2M vectors:
-    16.7 GB/rep total shuffle, ~11 GB of it that join; in-join scoring
-    measured ~9 GB). Costs: each side of the ONE meeting join carries
-    its vector (rows × ~dim·4 B instead of ids), duplicate meetings are
-    scored redundantly (cheap BLAS; cosine is bit-symmetric and
-    batch-independent, so the post-threshold ``distinct`` on
-    (id_a, id_b, cos_sim) still collapses them exactly). Implies
-    BLAS-batch scoring — the ulp note above applies; the bit-exact
-    oracle twins keep the default path.
+    Scoring runs IN the bucket meeting join: vectors ride the bucket
+    rows, every meeting is scored by ``_cosine_udf`` on the join output,
+    and only the pairs at or above the threshold reach the ``distinct``.
+    Scoring after a pair-id ``distinct`` would instead drag a vector per
+    PAIR through an id-keyed exchange, the operator's dominant shuffle
+    term once cells are sized (2M vectors: ~9 GB/rep total shuffle
+    in-join against 16.7 GB/rep). Duplicate meetings of a pair are scored
+    redundantly and collapse in the ``distinct``, because the kernel is
+    batch-independent and symmetric in its arguments. ``cos_sim`` is
+    bit-identical to ``cosine`` on the same pair; a zero-norm vector has
+    no cosine, so it meets nothing, and a NULL vector gets no buckets.
 
     SIZE THE CELLS WITH THE CORPUS: candidate pairs grow as
     ``tables · n² / cells``, so a ``bits`` that worked at 2k vectors
@@ -549,35 +542,32 @@ def embedding_near_dups(
     plane_sets = [
         _hyperplanes(dim, nplanes, seed + 1000 * t) for t in range(tables)
     ]
-    # in-join scoring: the vector rides the bucket rows so the meeting
-    # join can score without a later per-pair vector attach (see
-    # docstring); ids-only rows otherwise
-    vcols = [F.col(vec_col).alias("_v")] if score_in_join else []
-    vnames = ["_v"] if score_in_join else []
+    # the vector rides the bucket rows so the meeting join can score
+    # without a later per-pair vector attach (see docstring)
     if multiprobe:
         sketch = rp_multiprobe_udf(plane_sets, multiprobe, refine_frac)
         raw = df.select(
             F.col(id_col).alias("_id"),
-            *vcols,
+            F.col(vec_col).alias("_v"),
             F.posexplode(sketch(F.col(vec_col))).alias("tbl", "_bkts"),
         )
         # stored side: home bucket only (element 1); probe side: home +
         # the flip variants. localCheckpoint is NOT needed — both frames
         # are projections of one exchange-free scan.
         b = raw.select(
-            "_id", *vnames, "tbl", F.element_at(F.col("_bkts"), 1).alias("bkt")
+            "_id", "_v", "tbl", F.element_at(F.col("_bkts"), 1).alias("bkt")
         )
         probe = raw.select(
-            "_id", *vnames, "tbl",
+            "_id", "_v", "tbl",
             F.posexplode(F.col("_bkts")).alias("_pi", "bkt"),
         ).select(
-            "_id", *vnames, "tbl", "bkt", (F.col("_pi") == 0).alias("_home")
+            "_id", "_v", "tbl", "bkt", (F.col("_pi") == 0).alias("_home")
         )
     else:
         sketch = rp_buckets_udf(plane_sets, refine_frac)
         b = df.select(
             F.col(id_col).alias("_id"),
-            *vcols,
+            F.col(vec_col).alias("_v"),
             F.posexplode(sketch(F.col(vec_col))).alias("tbl", "bkt"),
         )
         probe = b
@@ -608,139 +598,71 @@ def embedding_near_dups(
         # halving the join output for the dominant meeting kind while
         # changing nothing after the distinct (pinned by test)
         l, r = probe.alias("l"), b.alias("r")
-        cond = (
-            (F.col("l.tbl") == F.col("r.tbl"))
-            & (F.col("l.bkt") == F.col("r.bkt"))
-            & F.when(
-                F.col("l._home"),
-                F.col("l._id") < F.col("r._id"),
-            ).otherwise(F.col("l._id") != F.col("r._id"))
-        )
-        if score_in_join:
-            return _score_meetings(l, r, cond, threshold)
-        # pair-dedup exchange pinned at full width: the per-pair cosine
-        # fold downstream is CPU-dense per byte and AQE's byte-based
-        # coalescing would run it near-serial (see skew.full_shuffle_width);
-        # the explicit repartition IS the distinct's required
-        # distribution, so no exchange is added
-        pair_ids = (
-            l.join(r, cond)
-            .select(
-                F.least(F.col("l._id"), F.col("r._id")).alias("id_a"),
-                F.greatest(F.col("l._id"), F.col("r._id")).alias("id_b"),
-            )
-            .repartition(full_shuffle_width(df), "id_a", "id_b")
-            .distinct()
-        )
-        return _score_pairs(
-            df, pair_ids, threshold, id_col, vec_col, arrow=score_arrow
-        )
-    l, r = b.alias("l"), b.alias("r")
+        pair = F.when(
+            F.col("l._home"),
+            F.col("l._id") < F.col("r._id"),
+        ).otherwise(F.col("l._id") != F.col("r._id"))
+    else:
+        l, r = b.alias("l"), b.alias("r")
+        pair = F.col("l._id") < F.col("r._id")
     cond = (
         (F.col("l.tbl") == F.col("r.tbl"))
         & (F.col("l.bkt") == F.col("r.bkt"))
-        & (F.col("l._id") < F.col("r._id"))
+        & pair
     )
-    if score_in_join:
-        return _score_meetings(l, r, cond, threshold)
-    # id-only candidate pairs (see lsh_topk: never distinct() on vectors),
-    # then score once per pair after joining the vectors back
-    pair_ids = (
+    # every meeting is scored on the join output and only threshold
+    # survivors reach the distinct; duplicate meetings of a pair emit
+    # the identical (id_a, id_b, cos_sim) row because the kernel is
+    # batch-independent and bit-symmetric in its arguments
+    return (
         l.join(r, cond)
-        .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
-        .repartition(full_shuffle_width(df), "id_a", "id_b")
+        .select(
+            F.least(F.col("l._id"), F.col("r._id")).alias("id_a"),
+            F.greatest(F.col("l._id"), F.col("r._id")).alias("id_b"),
+            _cosine_udf()(F.col("l._v"), F.col("r._v")).alias("cos_sim"),
+        )
+        .filter(F.col("cos_sim") >= threshold)
         .distinct()
     )
-    return _score_pairs(
-        df, pair_ids, threshold, id_col, vec_col, arrow=score_arrow
-    )
 
 
-def _cosine_arrow_udf():
-    """Arrow-batched pairwise cosine: one ``einsum`` per Arrow batch
-    instead of three interpreted HOF folds per pair. The HOF ``cosine``
-    is CSE-excluded and never enters whole-stage codegen, so per-pair
-    scoring dominates every candidate-bounded near-dup wall (measured on
-    the round-10 board: 60 s of compute on a 7 MB-shuffle tier). Dense
-    per-row linear algebra is the sanctioned pandas-UDF case (see
-    ``rp_buckets_udf``). Summation order differs from the sequential
-    fold (BLAS/pairwise vs left fold), so results may differ in the
-    last ulp — the production tier; the fold stays the default for the
-    bit-exact oracle twins."""
+def _cosine_udf():
+    """Arrow-batched pairwise cosine in ``cosine``'s own fold order: one
+    column-at-a-time accumulation per Arrow batch (``acc + a_j * b_j``
+    from 0.0, then sqrt, multiply, divide) instead of three interpreted
+    HOF folds per pair, which never enter whole-stage codegen. Every
+    step is the same IEEE double operation in the same order, so the
+    result is bit-identical to ``cosine`` (a BLAS dot sums in a
+    different order and differs in the last ulp); NULL where the norm
+    product is 0, as ``cosine``."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
+    def fold_dot(a, b):
+        acc = np.zeros(len(a))
+        for j in range(a.shape[1]):
+            acc = acc + a[:, j] * b[:, j]
+        return acc
+
     def f(va, vb):
         a = np.vstack(va.to_numpy()).astype(np.float64)
         b = np.vstack(vb.to_numpy()).astype(np.float64)
-        num = np.einsum("ij,ij->i", a, b)
-        den = np.sqrt(np.einsum("ij,ij->i", a, a)) * np.sqrt(
-            np.einsum("ij,ij->i", b, b)
-        )
-        return pd.Series(num / den)
+        den = np.sqrt(fold_dot(a, a)) * np.sqrt(fold_dot(b, b))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = fold_dot(a, b) / den
+        # NaN becomes NULL on the way back to Arrow
+        return pd.Series(np.where(den == 0, np.nan, cos))
 
     f.__annotations__ = {"va": pd.Series, "vb": pd.Series, "return": pd.Series}
     # nondeterministic marking is a pure OPTIMIZER fence: the threshold
     # filter sits directly on this UDF's output, and a deterministic
     # expression gets duplicated into the pushed-down filter — two
     # ArrowEvalPython nodes scoring every candidate twice (observed in
-    # the physical plan). The function is in fact deterministic (per-row
-    # einsum, batch-independent), so results are unchanged; the fence
-    # just keeps one evaluation feeding both the filter and the output.
+    # the physical plan). The function is in fact deterministic (per-row,
+    # batch-independent), so results are unchanged; the fence just keeps
+    # one evaluation feeding both the filter and the output.
     return pandas_udf(f, "double").asNondeterministic()
-
-
-def _score_pairs(
-    df: DataFrame,
-    pair_ids: DataFrame,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-    arrow: bool = False,
-) -> DataFrame:
-    """Attach both vectors back to an id-only candidate pair frame and
-    keep pairs at or above the cosine threshold — the shared tail of
-    the single-probe and multiprobe candidate paths (the candidate join
-    itself never carries vectors; see lsh_topk). ``arrow=True`` scores
-    via the BLAS-batch UDF (production tier, ~ulp-different summation);
-    the default sequential fold is what the SQL oracles replay bitwise."""
-    va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
-    vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
-    score = (
-        _cosine_arrow_udf()(F.col("_va"), F.col("_vb"))
-        if arrow
-        else cosine(F.col("_va"), F.col("_vb"))
-    )
-    return (
-        pair_ids.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", score.alias("cos_sim"))
-        .filter(F.col("cos_sim") >= threshold)
-    )
-
-
-def _score_meetings(l: DataFrame, r: DataFrame, cond, threshold: float) -> DataFrame:
-    """In-join scoring tail (``score_in_join=True``): every bucket
-    meeting is scored by the BLAS-batch cosine UDF directly on the join
-    output, sub-threshold meetings are dropped, and only the survivors
-    reach the ``distinct``. Duplicate meetings of the same pair collapse
-    exactly: the per-row einsum is batch-independent and bit-symmetric
-    in its arguments (products commute, per-row summation order is
-    fixed), so every meeting of a pair emits the identical
-    (id_a, id_b, cos_sim) row."""
-    return (
-        l.join(r, cond)
-        .select(
-            F.least(F.col("l._id"), F.col("r._id")).alias("id_a"),
-            F.greatest(F.col("l._id"), F.col("r._id")).alias("id_b"),
-            _cosine_arrow_udf()(F.col("l._v"), F.col("r._v")).alias(
-                "cos_sim"
-            ),
-        )
-        .filter(F.col("cos_sim") >= threshold)
-        .distinct()
-    )
 
 
 def _max_multiprobe(bits: int) -> int:
@@ -786,7 +708,7 @@ def rp_multiprobe_udf(
 
     Returns ``array<array<long>>``, one ``multiprobe + 1``-long bucket
     list per table; element 1 is always the home bucket
-    ``rp_buckets_udf`` would emit. Same BLAS shape as the single-probe
+    ``rp_buckets_udf`` would emit. NULL for a NULL vector. Same BLAS shape as the single-probe
     UDF — one (batch × dim) @ (dim × tables·bits) matmul per Arrow
     batch plus argsorts over the ``O(bits + T²)``-wide candidate pool.
 
@@ -825,8 +747,8 @@ def rp_multiprobe_udf(
     to_keys = _refine_keys_np(bits - 1, refine_frac) if refine_frac else None
 
     def f(s):
-        mat = np.vstack(s.to_numpy()).astype(np.float64)  # (batch, dim)
-        proj = mat @ stacked  # (batch, tables*bits)
+        mat, at = _stack_vectors(s, len(stacked))  # (rows, dim)
+        proj = mat @ stacked  # (rows, tables*bits)
         per = (proj >= 0).reshape(len(mat), tables, bits)
         home = (per * weights).sum(axis=2)  # (batch, tables)
         margins = np.abs(proj).reshape(len(mat), tables, bits)
@@ -848,7 +770,7 @@ def rp_multiprobe_udf(
         out = np.concatenate([home[:, :, None], flips], axis=2)
         if to_keys is not None:
             out = to_keys(out)
-        return pd.Series([row.tolist() for row in out])
+        return _scatter([row.tolist() for row in out], at, len(s))
 
     f.__annotations__ = {"s": pd.Series, "return": pd.Series}
     return pandas_udf(f, "array<array<long>>")

@@ -299,19 +299,6 @@ def compact_fertility_table(spark, table_path: str, dest_path: str) -> dict:
     )
 
 
-def language_scores(text: Column) -> Column:
-    """Struct of per-language stopword-hit counts."""
-    toks = tokens(F.lower(text))
-    return F.struct(
-        *[
-            F.size(
-                F.array_intersect(toks, F.array(*[F.lit(w) for w in ws]))
-            ).alias(lang)
-            for lang, ws in STOPWORDS.items()
-        ]
-    )
-
-
 def language_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -> DataFrame:
     """Heuristic n-gram/stopword language ID: score each language profile by
     distinct stopword hits, argmax wins (ties broken by language code order

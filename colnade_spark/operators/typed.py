@@ -468,17 +468,11 @@ def embedding_near_dups(
     5M board scale is tabled in SCALE.md round 10; prefer raising T over
     adding tables: a table multiplies SKETCH STORAGE and candidates
     alike, a probe multiplies candidates only), and the ``max_bucket=32``
-    skew guard for clustered corpora. Scoring runs IN the meeting join
-    (``score_in_join=True`` default here): the BLAS-batch cosine is
-    computed on the join output and only threshold survivors reach the
-    distinct — candidate scoring dominates the wall once cells are
-    sized (round-10 board: the interpreted fold was ~85% of multiprobe
-    wall), and scoring after the distinct dragged a vector per PAIR
-    through an id-keyed exchange, the operator's dominant shuffle term
-    (~11 of 16.7 GB/rep at the 2M-vector board tier); cosines may differ
-    from the sequential fold in the last ulp (pair sets identical away
-    from the threshold — pinned by test). Pass an explicit ``bits=`` to
-    skip the sizing count (fixture/debug tier); other kwargs forward to
+    skew guard for clustered corpora. Candidates are scored inside the
+    bucket meeting join by a kernel bit-identical to
+    ``similarity.cosine``, so only threshold survivors reach the
+    distinct. Pass an explicit ``bits=`` to skip the sizing count
+    (fixture/debug tier); other kwargs forward to
     ``operators.similarity.embedding_near_dups``."""
     from colnade_spark.operators import similarity as _similarity
 
@@ -489,8 +483,6 @@ def embedding_near_dups(
         )
         kwargs["bits"] = bits
         kwargs["refine_frac"] = frac
-    if "score_arrow" not in kwargs:
-        kwargs.setdefault("score_in_join", True)
     if "bits" not in kwargs and "refine_frac" in kwargs:
         # refine_frac without bits would mix a caller fraction into a
         # sized cell count — occupancy would be off target silently

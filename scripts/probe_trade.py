@@ -70,7 +70,6 @@ def main() -> None:
     ).select("vec_id", "embedding")
     embedding_near_dups(
         warm, dim=64, threshold=0.95, bits=8, tables=2, multiprobe=2,
-        score_in_join=True,
     ).write.format("noop").mode("overwrite").save()
 
     results = {}
@@ -79,7 +78,6 @@ def main() -> None:
         kw = dict(
             dim=64, threshold=0.95, bits=bits, refine_frac=frac,
             tables=tables, max_bucket=32, multiprobe=t,
-            score_in_join=True,  # production scoring tier (in-join BLAS batch)
         )
         # one timed pass: collect the id pairs (a few 10^4 rows — the
         # driver transfer is noise next to the candidate join)

@@ -111,7 +111,7 @@ def _emb_near_dup_scaled(spark, d: str, **kw):
     bits, refine_frac = sized_lsh(n, target_occupancy=8.0)
     return embedding_near_dups(
         e, dim=64, threshold=0.95, bits=bits, refine_frac=refine_frac,
-        tables=4, max_bucket=32, score_in_join=True, **kw,
+        tables=4, max_bucket=32, **kw,
     ).select("id_a", "id_b", F.round(F.col("cos_sim"), 6).alias("cos_sim"))
 
 

@@ -409,18 +409,26 @@ def test_embedding_near_dups_finds_planted_duplicate(spark, embs):
     clone = base.filter(F.col("vec_id") == base.first().vec_id).withColumn(
         "vec_id", F.col("vec_id") + 1_000_000
     )
-    df = base.unionByName(clone)
-    pairs = similarity.embedding_near_dups(df, dim=dim, threshold=0.99).collect()
-    assert any(r.id_b == r.id_a + 1_000_000 for r in pairs)
+    # one NULL embedding: no buckets, so no pairs — not a sketch-UDF crash
+    null_row = spark.createDataFrame([(2_000_000, None, 0)], base.schema)
+    df = base.unionByName(clone).unionByName(null_row)
+    for kw in ({}, dict(multiprobe=2)):
+        pairs = similarity.embedding_near_dups(
+            df, dim=dim, threshold=0.99, **kw
+        ).collect()
+        assert any(r.id_b == r.id_a + 1_000_000 for r in pairs)
+        assert all(2_000_000 not in (r.id_a, r.id_b) for r in pairs)
 
 
-def test_embedding_near_dups_score_arrow_matches_fold(spark, embs):
-    """The BLAS-batch scoring tier (score_arrow=True, the production
-    path) finds the IDENTICAL pair set as the sequential HOF fold at
-    the same candidates, and its cosines agree to ~ulp (summation order
-    is the only difference; fixtures keep pairs far from the threshold,
-    so the set cannot flip). Covers the multiprobe path too — scoring
-    is the shared tail of both candidate paths."""
+def test_embedding_near_dups_cos_sim_equals_cosine(spark, embs):
+    """The in-join scoring kernel replays ``similarity.cosine``'s fold
+    order, so every returned cos_sim is bit-identical (==) to the fold
+    recomputed on that pair, on both the single-probe and the
+    multiprobe + refine_frac candidate paths; and because duplicate
+    meetings of a pair are scored redundantly before the distinct, no
+    duplicate (id_a, id_b) may survive (the kernel must be
+    bit-symmetric and batch-independent for the distinct to collapse
+    them)."""
     dim = len(embs.select("embedding").first().embedding)
     base = embs.limit(200).select("vec_id", "embedding")
     # plant near-copies (tiny first-component nudge → non-trivial
@@ -433,49 +441,61 @@ def test_embedding_near_dups_score_arrow_matches_fold(spark, embs):
         ).cast("array<float>").alias("embedding"),
     )
     df = base.unionByName(clones)
-    kw = dict(
-        dim=dim, threshold=0.9, bits=6, tables=3, multiprobe=2,
-        refine_frac=0.3,
+    va = df.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("_va"))
+    vb = df.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("_vb"))
+    for kw in (
+        dict(dim=dim, threshold=0.9, bits=6, tables=3, max_bucket=64),
+        dict(
+            dim=dim, threshold=0.9, bits=6, tables=3, multiprobe=2,
+            refine_frac=0.3,
+        ),
+    ):
+        rows = (
+            similarity.embedding_near_dups(df, **kw)
+            .join(va, "id_a")
+            .join(vb, "id_b")
+            .select(
+                "id_a", "id_b", "cos_sim",
+                similarity.cosine(F.col("_va"), F.col("_vb")).alias("fold"),
+            )
+            .collect()
+        )
+        assert rows, "fixture must surface at least one candidate pair"
+        assert len({(r.id_a, r.id_b) for r in rows}) == len(rows)
+        assert all(r.id_a < r.id_b for r in rows)
+        assert all(r.cos_sim == r.fold for r in rows)
+        # the clones' cosines sit below 1.0: the check compares real bits
+        assert any(r.cos_sim < 1.0 for r in rows)
+
+
+def test_zero_vectors_have_no_cosine(spark):
+    """A zero-norm vector has no cosine (NULL, DuckDB's ``x / 0.0``):
+    brute-force top-k and near-dup scoring must neither raise (a plain
+    divide by zero does under ANSI mode) nor return a NULL score."""
+    zero = [0.0] * 4
+    df = spark.createDataFrame(
+        [
+            (1, zero),
+            (2, zero),
+            (3, [1.0, 0.0, 0.0, 0.0]),
+            (4, [1.0, 0.0, 0.0, 0.0]),
+            (5, [0.0, 1.0, 0.0, 0.0]),
+        ],
+        "vec_id long, embedding array<float>",
     )
-    fold = {
-        (r.id_a, r.id_b): r.cos_sim
-        for r in similarity.embedding_near_dups(df, **kw).collect()
-    }
-    arrow = {
-        (r.id_a, r.id_b): r.cos_sim
-        for r in similarity.embedding_near_dups(
-            df, score_arrow=True, **kw
+    top = similarity.brute_force_topk(df, df, k=2).collect()
+    assert {r.query_id for r in top} == {1, 2, 3, 4, 5}
+    a, b = df.alias("a"), df.alias("b")
+    scored = a.crossJoin(b).select(
+        similarity.cosine(F.col("a.embedding"), F.col("b.embedding")).alias("c"),
+        ((F.col("a.vec_id") <= 2) | (F.col("b.vec_id") <= 2)).alias("zero"),
+    )
+    assert all((r.c is None) == r.zero for r in scored.collect())
+    for kw in ({}, dict(multiprobe=2)):
+        pairs = similarity.embedding_near_dups(
+            df, dim=4, threshold=0.5, bits=4, tables=2, **kw
         ).collect()
-    }
-    assert fold, "fixture must surface at least one candidate pair"
-    assert set(fold) == set(arrow)
-    assert all(abs(fold[p] - arrow[p]) < 1e-9 for p in fold)
-    # the IN-JOIN scoring tier (score_in_join=True): same pair set,
-    # same ~ulp cosine agreement, and — because duplicate meetings of a
-    # pair are scored redundantly before the distinct — no duplicate
-    # (id_a, id_b) may survive (the einsum must be bit-symmetric and
-    # batch-independent for the distinct to collapse them)
-    injoin_rows = similarity.embedding_near_dups(
-        df, score_in_join=True, **kw
-    ).collect()
-    injoin = {(r.id_a, r.id_b): r.cos_sim for r in injoin_rows}
-    assert len(injoin_rows) == len(injoin)
-    assert set(fold) == set(injoin)
-    assert all(abs(fold[p] - injoin[p]) < 1e-9 for p in fold)
-    # single-probe path shares the tail through the other branch
-    kw1 = dict(dim=dim, threshold=0.9, bits=6, tables=3, max_bucket=64)
-    f1 = {
-        (r.id_a, r.id_b): r.cos_sim
-        for r in similarity.embedding_near_dups(df, **kw1).collect()
-    }
-    i1 = {
-        (r.id_a, r.id_b): r.cos_sim
-        for r in similarity.embedding_near_dups(
-            df, score_in_join=True, **kw1
-        ).collect()
-    }
-    assert f1 and set(f1) == set(i1)
-    assert all(abs(f1[p] - i1[p]) < 1e-9 for p in f1)
+        assert [(r.id_a, r.id_b, r.cos_sim) for r in pairs] == [(3, 4, 1.0)]
 
 
 def test_embedding_near_dups_max_bucket_skew_guard(spark):
