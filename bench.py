@@ -214,7 +214,9 @@ def main() -> None:
     # compact separators): the driver's bounded tail capture (2000 bytes in
     # rounds 4-10, which truncated line 1 and lost every per-query number —
     # PERF_r10 per_query/scaling came back empty) retains whole chunk lines
-    # it can parse, so per-query and scaling comparisons work again.
+    # it can parse, so per-query and scaling comparisons work again. The
+    # chunks run from the fastest queries to the slowest, so a tail cut
+    # keeps the hottest ones.
     print(
         json.dumps(
             {
@@ -226,7 +228,7 @@ def main() -> None:
             }
         )
     )
-    names = list(per_query)
+    names = sorted(per_query, key=per_query.__getitem__)
     chunk = 12
     parts = (len(names) + chunk - 1) // chunk
     for i in range(parts):

@@ -861,6 +861,19 @@ class SparkBackend:
         # Spark 4 createDataFrame accepts a pyarrow.Table directly — no
         # pandas hop (which loses nullable-int dtypes and copies memory).
         table = pa.Table.from_batches(list(batches))
+        # Arrow keeps per-column NULL counts, so a NULL in a declared
+        # non-nullable column is a typed error here instead of PySpark's
+        # untyped ValueError from inside createDataFrame
+        nulls = [
+            NullViolation(column=name, null_count=table.column(name).null_count)
+            for name, col in schema._columns.items()
+            if not col.nullable and name in table.column_names and table.column(name).null_count
+        ]
+        if nulls:
+            raise SchemaError(
+                message=f"NULLs in non-nullable columns of {schema.__name__}",
+                null_violations=nulls,
+            )
         return get_spark().createDataFrame(table, schema=to_struct_type(schema))
 
     def from_dict(self, data: dict[str, list[Any]], schema: Any) -> SparkDF:
@@ -889,8 +902,10 @@ class SparkBackend:
     # validation
     # ------------------------------------------------------------------
     def validate_schema(self, data: SparkDF, schema: Any) -> SchemaError:
-        """Structural check: metadata-only schema compare + ONE null-count
-        job over all declared-non-nullable columns (never per-column jobs)."""
+        """Structural check: metadata-only schema compare, then NULL counts
+        for the declared-non-nullable columns: from parquet footers when
+        the frame is a bare scan, else ONE null-count job over the columns
+        the footers cannot answer (never per-column jobs)."""
         err = SchemaError(message=f"structural validation failed for {schema.__name__}")
         actual = {f.name: f for f in data.schema.fields}
         declared = schema._columns
@@ -920,16 +935,16 @@ class SparkBackend:
             and not any(m.column == name for m in err.type_mismatches)
         ]
         if nn_cols:
-            counts = data.agg(
-                *[
-                    F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(c)
-                    for c in nn_cols
-                ]
-            ).first()
+            from colnade_spark.io import footer_null_counts
+
+            counts = footer_null_counts(data, nn_cols)
+            rest = [c for c in nn_cols if c not in counts]
+            if rest:
+                row = data.agg(*[F.count_if(F.col(c).isNull()).alias(c) for c in rest]).first()
+                counts.update({c: row[c] or 0 for c in rest})
             for c in nn_cols:
-                n = counts[c] or 0
-                if n > 0:
-                    err.null_violations.append(NullViolation(column=c, null_count=int(n)))
+                if counts[c] > 0:
+                    err.null_violations.append(NullViolation(column=c, null_count=counts[c]))
         return err
 
     def validate_values(self, data: SparkDF, schema: Any) -> SchemaError:
@@ -974,10 +989,7 @@ class SparkBackend:
                     raise SchemaError(message=f"unknown constraint {kind!r}")
                 checks.append((name, kind, pred))
 
-        check_exprs = [
-            F.sum(F.when(pred, 1).otherwise(0)).alias(f"c{i}")
-            for i, (_, _, pred) in enumerate(checks)
-        ]
+        check_exprs = [F.count_if(pred).alias(f"c{i}") for i, (_, _, pred) in enumerate(checks)]
         # uniqueness in the same pass: dup_count = count(col) - countDistinct(col)
         check_exprs += [
             (F.count(F.col(u)) - F.countDistinct(F.col(u))).alias(f"u{i}")
@@ -988,9 +1000,7 @@ class SparkBackend:
         for chk in sc_checks:
             node = chk.fn(schema)
             sc_preds.append(~self.translate_expr(node))
-        check_exprs += [
-            F.sum(F.when(p, 1).otherwise(0)).alias(f"s{i}") for i, p in enumerate(sc_preds)
-        ]
+        check_exprs += [F.count_if(p).alias(f"s{i}") for i, p in enumerate(sc_preds)]
 
         if not check_exprs:
             return err

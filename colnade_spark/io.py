@@ -107,6 +107,81 @@ def footer_schema(path: str, spark: SparkSession):
         return None, None
 
 
+def _bare_parquet_files(data) -> list[str] | None:
+    """Local paths of the files a frame scans when its analyzed plan is a
+    bare parquet scan: ``Project``s of plain attributes over an
+    unpartitioned ``HadoopFsRelation`` with ``ParquetFileFormat``, every
+    file a ``file:`` URI. ``None`` for any other plan."""
+    from urllib.parse import unquote, urlparse
+
+    plan = data._jdf.queryExecution().analyzed()
+    while plan.nodeName() == "Project":
+        # a projection of bare attributes is its own output; an alias or
+        # any computed expression makes a new attribute
+        if not plan.projectList().equals(plan.output()):
+            return None
+        plan = plan.child()
+    if plan.nodeName() != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if (
+        rel.getClass().getSimpleName() != "HadoopFsRelation"
+        or rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
+        or not rel.partitionSchema().isEmpty()
+    ):
+        return None
+    paths = []
+    for uri in rel.inputFiles():
+        u = urlparse(uri)
+        if u.scheme != "file" or u.netloc not in ("", "localhost"):
+            return None
+        paths.append(unquote(u.path))
+    return paths
+
+
+def footer_null_counts(data, cols) -> dict[str, int]:
+    """Exact NULL counts of ``cols`` read from parquet footers, for the
+    columns the footers can answer; the rest are left out.
+
+    Only a bare parquet scan qualifies (see ``_bare_parquet_files``):
+    any filter, computed column or partitioned directory changes what the
+    frame's rows are, so the footers no longer describe them. A column
+    counts only when it is a top-level leaf in every file and every row
+    group carries a ``null_count`` statistic. That leaves out nested
+    columns, whose leaf counts mix element NULLs with row NULLs; files
+    that lack the column, which the scan fills with NULLs; and files
+    written without statistics. An unreadable footer leaves out all
+    columns; an empty file list answers 0."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    files = _bare_parquet_files(data)
+    if files is None:
+        return {}
+    counts = dict.fromkeys(cols, 0)
+    try:
+        for path in files:
+            md = pq.read_metadata(path)
+            leaves = {}
+            for i in range(md.num_columns):
+                c = md.schema.column(i)
+                if c.path == c.name and c.max_repetition_level == 0:
+                    leaves[c.name] = i
+            groups = [md.row_group(g) for g in range(md.num_row_groups)]
+            for name in list(counts):
+                i = leaves.get(name)
+                stats = None if i is None else [g.column(i).statistics for g in groups]
+                if stats is None or not all(s is not None and s.has_null_count for s in stats):
+                    del counts[name]
+                else:
+                    counts[name] += sum(s.null_count for s in stats)
+            if not counts:
+                break
+    except (OSError, pa.ArrowException):
+        return {}
+    return counts
+
+
 def read_parquet_table(path: str, spark: SparkSession | None = None):
     """Untyped parquet read with the footer-schema fast path: identical
     frame to ``spark.read.parquet(path)`` minus the ~100 ms of JVM schema

@@ -114,16 +114,19 @@ def train_pq_codebooks(
 
 def _encode_udf(codebooks):
     """pandas UDF: integer-space nearest-codeword ids per subspace,
-    one vectorized pass per Arrow batch; ties to the lowest code."""
+    one vectorized pass per Arrow batch; ties to the lowest code. NULL
+    for a NULL vector."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
+
+    from colnade_spark.operators.similarity import _scatter, _stack_vectors
 
     CB = [_scale_int(np.asarray(b, dtype=np.float64)) for b in codebooks]
     ds = CB[0].shape[1]
 
     def f(s):
-        X = np.vstack(s.to_numpy()).astype(np.float64)
+        X, at = _stack_vectors(s, ds * len(CB))
         Xi = _scale_int(X)
         codes = np.empty((len(Xi), len(CB)), dtype=np.int32)
         for j, C in enumerate(CB):
@@ -132,7 +135,7 @@ def _encode_udf(codebooks):
             # (lowest) code on ties
             d = ((S[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
             codes[:, j] = d.argmin(axis=1)
-        return pd.Series(list(codes))
+        return _scatter(list(codes), at, len(s))
 
     f.__annotations__ = {"s": pd.Series, "return": pd.Series}
     return pandas_udf(f, "array<int>")
@@ -367,17 +370,20 @@ def _residual_encode_udf(codebooks, centroids):
     array<int> [list, code_0..code_{m-1}] — FAISS IVFPQ semantics, where
     codes quantize v - centroid[list]. Coarse assignment uses the SAME
     deterministic rule as embeddings.cluster_assign (dot rounded to 6,
-    ties to the HIGHEST centroid id) so the oracle can replay it."""
+    ties to the HIGHEST centroid id) so the oracle can replay it. NULL
+    for a NULL vector."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
+
+    from colnade_spark.operators.similarity import _scatter, _stack_vectors
 
     C = np.asarray(centroids, dtype=np.float64)
     CB = [_scale_int(np.asarray(b, dtype=np.float64)) for b in codebooks]
     ds = CB[0].shape[1]
 
     def f(s):
-        X = np.vstack(s.to_numpy()).astype(np.float64)
+        X, at = _stack_vectors(s, C.shape[1])
         scale = 1e6
         dots = X @ C.T
         dots = np.sign(dots) * np.floor(np.abs(dots) * scale + 0.5) / scale
@@ -391,7 +397,7 @@ def _residual_encode_udf(codebooks, centroids):
             S = Ri[:, j * ds : (j + 1) * ds]
             d = ((S[:, None, :] - B[None, :, :]) ** 2).sum(axis=2)
             out[:, 1 + j] = d.argmin(axis=1)
-        return pd.Series(list(out))
+        return _scatter(list(out), at, len(s))
 
     f.__annotations__ = {"s": pd.Series, "return": pd.Series}
     return pandas_udf(f, "array<int>")

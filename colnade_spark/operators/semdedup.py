@@ -67,6 +67,22 @@ __all__ = ["semantic_dup_pairs", "semantic_dedup"]
 _BLOCK = 1024
 
 
+def _no_pairs(ids):
+    """The empty pair frame of ``_pairs_arrow``, ids typed like ``ids``."""
+    import numpy as np
+    import pandas as pd
+
+    empty = np.array([], dtype=ids.dtype)
+    return pd.DataFrame(
+        {
+            "id_a": empty,
+            "id_b": empty,
+            "cluster_id": np.array([], dtype=np.int64),
+            "cos_sim": np.array([], dtype=np.float64),
+        }
+    )
+
+
 def _pairs_arrow(
     assigned: DataFrame,
     threshold: float,
@@ -87,8 +103,13 @@ def _pairs_arrow(
         import numpy as np
         import pandas as pd
 
+        # a NULL vector pairs with nothing (its cosine is NULL on the
+        # expression path); with assign_arrow it also has a NULL cluster
+        pdf = pdf[pdf[vec_col].notna()]
         pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
         ids = pdf[id_col].to_numpy()
+        if not len(ids):
+            return _no_pairs(ids)
         V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
         n = np.linalg.norm(V, axis=1)
         zero = n == 0.0
@@ -118,15 +139,7 @@ def _pairs_arrow(
                     out_b.append(ids[r + 1 + hit])
                     out_s.append(row[hit])
         if not out_a:
-            empty = np.array([], dtype=ids.dtype)
-            return pd.DataFrame(
-                {
-                    "id_a": empty,
-                    "id_b": empty,
-                    "cluster_id": np.array([], dtype=np.int64),
-                    "cos_sim": np.array([], dtype=np.float64),
-                }
-            )
+            return _no_pairs(ids)
         return pd.DataFrame(
             {
                 "id_a": np.concatenate(out_a),

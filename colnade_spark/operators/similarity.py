@@ -320,7 +320,8 @@ def lsh_topk(
 
 
 def _assign_udf(centroids):
-    """pandas UDF: nearest-centroid id per vector (one matmul per batch)."""
+    """pandas UDF: nearest-centroid id per vector (one matmul per batch);
+    NULL for a NULL vector, which therefore joins no list."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -329,9 +330,9 @@ def _assign_udf(centroids):
     Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
 
     def f(s):
-        M = np.vstack(s.to_numpy()).astype(np.float64)
+        M, at = _stack_vectors(s, C.shape[1])
         Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-        return pd.Series((Mn @ Cn.T).argmax(axis=1).astype("int32"))
+        return _scatter((Mn @ Cn.T).argmax(axis=1).tolist(), at, len(s))
 
     f.__annotations__ = {"s": pd.Series, "return": pd.Series}
     return pandas_udf(f, "int")
@@ -340,7 +341,8 @@ def _assign_udf(centroids):
 def _probe_udf(centroids, nprobe: int):
     """pandas UDF: the ``nprobe`` nearest centroid ids per vector
     (array<int>), one matmul per Arrow batch — the distributed twin of
-    ``_assign_udf`` for the query side."""
+    ``_assign_udf`` for the query side. NULL for a NULL vector, which
+    therefore probes no list."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -349,10 +351,10 @@ def _probe_udf(centroids, nprobe: int):
     Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
 
     def f(s):
-        M = np.vstack(s.to_numpy()).astype(np.float64)
+        M, at = _stack_vectors(s, C.shape[1])
         Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
         top = np.argsort(-(Mn @ Cn.T), axis=1)[:, :nprobe].astype("int32")
-        return pd.Series(list(top))
+        return _scatter(list(top), at, len(s))
 
     f.__annotations__ = {"s": pd.Series, "return": pd.Series}
     return pandas_udf(f, "array<int>")

@@ -19,6 +19,13 @@ _DEFAULTS = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # PySpark otherwise records the Python call site of every Column and
+    # functions call, at ~5 py4j round trips each; for typed frames that
+    # site is always colnade_spark's own lowering code, never the user's.
+    # Runtime errors keep their class and errorClass without it. Turn it
+    # back on with SPARK_GRAFT_EXTRA_CONF=
+    # "spark.python.sql.dataFrameDebugging.enabled=true".
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # local[32] testing default; a real cluster would size this to
     # ~2-3x total cores and rely on AQE coalescing
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),

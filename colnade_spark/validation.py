@@ -5,8 +5,9 @@ Three levels (reference: src/colnade/validation.py:39-99):
 - ``OFF`` (default): zero runtime checks — production setting.
 - ``STRUCTURAL``: column presence / dtype equality / nullability at data
   boundaries. On Spark the schema compare is metadata-only (free); the
-  null-count check is ONE generated aggregation job over all non-nullable
-  columns, never per-column jobs.
+  null counts of the non-nullable columns come from parquet footers when
+  the frame is a bare scan, else from ONE generated aggregation job over
+  the columns the footers cannot answer, never per-column jobs.
 - ``FULL``: STRUCTURAL + ``Field()`` constraints + ``@schema_check``
   invariants, all folded into a single aggregation pass.
 

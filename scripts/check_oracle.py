@@ -5,6 +5,7 @@ with an ``oracle_sql()`` entry runs the SQL in DuckDB over the same parquet
 tables, then compares: row count, column-name set, and values (columns
 sorted by name, rows sorted; exact for non-floats, bit-exact-first with a
 reported max-abs-delta for floats so we can see how far off a mismatch is).
+Each DuckDB query runs once; its time is printed next to the Spark time.
 
 Usage: python scripts/check_oracle.py [query ...]
 """
@@ -79,17 +80,20 @@ def compare(name: str, spark_df, con) -> tuple[bool, str]:
     spark_s = time.time() - t0
     if sql is None:
         return True, f"rows-only: {len(s_rows)} rows ({spark_s:.1f}s)"
-    res = con.execute(sql)
-    o_cols = [d[0] for d in res.description]
+    # the query runs once: column names and types come from the bound
+    # relation, the rows from its one execution
+    res = con.sql(sql)
+    o_cols = res.columns
+    t0 = time.time()
     o_rows = [tuple(r) for r in res.fetchall()]
+    duck_s = time.time() - t0
     # The driver fetches oracle results via Arrow: DuckDB HUGEINT (e.g. a bare
-    # sum(BIGINT)) arrives as decimal128 and value-hashes differently from
-    # Spark's int64 even when the Python ints are equal. Flag it here so the
-    # local gate catches what the driver's hash catches.
-    arrow_schema = con.execute(sql).fetch_arrow_table().schema
+    # sum(BIGINT)) and DECIMAL arrive as decimal128 and value-hash differently
+    # from Spark's int64 even when the Python ints are equal. Flag it here so
+    # the local gate catches what the driver's hash catches.
     leaks = [
-        f"{f.name}:{f.type}" for f in arrow_schema
-        if "decimal" in str(f.type)
+        f"{c}:{t}" for c, t in zip(o_cols, map(str, res.types))
+        if "DECIMAL" in t or "HUGEINT" in t
     ]
     if leaks:
         return False, (
@@ -125,7 +129,7 @@ def compare(name: str, spark_df, con) -> tuple[bool, str]:
             f"VALUE MISMATCH cells={n_exact_mismatch} max_float_delta={max_delta:.3e}"
             f"\n  spark : {first_bad[0]}\n  oracle: {first_bad[1]}"
         )
-    return True, f"OK: {len(s_rows)} rows bit-exact ({spark_s:.1f}s)"
+    return True, f"OK: {len(s_rows)} rows bit-exact (spark {spark_s:.1f}s, duckdb {duck_s:.1f}s)"
 
 
 def main() -> int:

@@ -497,3 +497,38 @@ def test_residual_contamination_report_matches_flags(spark, sf_dir):
         assert r.frac_hits == hits / n and r.max_adc == max(scores.values())
     with pytest.raises(ValueError, match="at least one query"):
         pq_residual_contamination_report(codes, [], books, cents, 0.5)
+
+
+def test_ivf_null_vector_gets_no_list(spark, sf_dir):
+    """A NULL vector gets a NULL list, probe list and codes: as a corpus
+    row it is never a neighbor, as a query it has no results, and every
+    other row's results stay the same."""
+    from colnade_spark.operators.pq import (
+        ivfpq_residual_topk,
+        ivfpq_topk,
+        train_residual_codebooks,
+    )
+    from colnade_spark.operators.similarity import _assign_udf, _probe_udf
+
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    null = spark.createDataFrame([(10**6, None)], e.schema)
+    cents = [
+        [((((j * 31) + (d * 17)) % 7) - 3) / 4.0 for d in range(64)]
+        for j in range(4)
+    ]
+    q = e.filter(F.col("vec_id") < 4)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    books = train_pq_codebooks(e, m=8, ksub=8, sample_n=256, seed=5)
+    rbooks = train_residual_codebooks(e, cents, m=8, ksub=16, sample_n=512, seed=11)
+    for topk, bk in ((ivfpq_topk, books), (ivfpq_residual_topk, rbooks)):
+        with_null = topk(e.unionByName(null), q.unionByName(null), bk, cents, k=5, nprobe=2)
+        assert rows(with_null) == rows(topk(e, q, bk, cents, k=5, nprobe=2))
+    got = null.select(
+        _assign_udf(cents)(F.col("embedding")), _probe_udf(cents, 2)(F.col("embedding"))
+    ).first()
+    assert tuple(got) == (None, None)

@@ -256,3 +256,22 @@ def test_empty_centroids_raise_on_both_assignment_paths(spark):
             semantic_dup_pairs(df, [], 0.9, assign_arrow=arrow)
         with pytest.raises(ValueError, match="centroids must be non-empty"):
             semantic_dedup(df, [], 0.9, assign_arrow=arrow)
+
+
+def test_null_vector_survives_on_every_path(spark):
+    """A NULL embedding pairs with nothing, so it survives; the other
+    rows' survivors do not change. The pandas-UDF assignment gives it a
+    NULL cluster, the Arrow pairing skips it."""
+    df = spark.createDataFrame(
+        _vecs() + [(8, None)], "vec_id long, embedding array<double>"
+    )
+    want = _model_survivors(_vecs(), 0.95) + [8]
+    for use_arrow in (True, False):
+        for assign_arrow in (False, True):
+            got = sorted(
+                r.vec_id
+                for r in semantic_dedup(
+                    df, CENTROIDS, 0.95, use_arrow=use_arrow, assign_arrow=assign_arrow
+                ).collect()
+            )
+            assert got == want, (use_arrow, assign_arrow)

@@ -137,3 +137,20 @@ def test_str_extract_empty_capture_is_null(spark):
     # '' -> empty match -> NULL
     assert star[4] is None
     assert set(none.values()) == {None}
+
+
+def test_ansi_runtime_error_keeps_its_class_without_call_sites(spark):
+    """The session skips PySpark's per-call call-site capture
+    (``spark.python.sql.dataFrameDebugging.enabled=false``); an ANSI
+    runtime error still arrives as the typed PySpark exception with its
+    error class."""
+    import pytest
+    from pyspark.errors import ArithmeticException
+
+    from colnade_spark.dtypes import Int32
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    f = DataFrame.from_dict({"id": [2**40], "x": [None], "s": ["a"], "xs": [None]}, Mixed)
+    with pytest.raises(ArithmeticException) as ei:
+        f.with_columns(Mixed.id.cast(Int32).alias("narrow")).native.collect()
+    assert ei.value.getCondition() == "CAST_OVERFLOW"

@@ -103,6 +103,32 @@ def test_from_batches_preserves_nullable_ints(spark):
     assert rows == {1: 10, 2: None, 3: 30}
 
 
+def test_from_batches_null_in_non_nullable_column_is_a_schema_error(spark):
+    """A NULL in a declared non-null column raises SchemaError with the
+    column's NULL count at every validation level, not PySpark's
+    untyped ValueError from createDataFrame."""
+    import pyarrow as pa
+
+    from colnade_spark.errors import NullViolation
+    from colnade_spark.validation import ValidationLevel, set_validation
+
+    class MaybeInts(Schema):
+        id: Column[Int64]
+        v: Column[Int64 | None]
+
+    batch = pa.RecordBatch.from_pydict(
+        {
+            "id": pa.array([1, None, None], pa.int64()),
+            "v": pa.array([None, None, 30], pa.int64()),
+        }
+    )
+    for level in ValidationLevel:
+        set_validation(level)
+        with pytest.raises(SchemaError) as ei:
+            DataFrame.from_batches([batch], MaybeInts)
+        assert ei.value.null_violations == [NullViolation(column="id", null_count=2)]
+
+
 def test_arrow_batch_name_validation(spark):
     import pyarrow as pa
 
